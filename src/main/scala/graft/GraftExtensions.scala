@@ -226,8 +226,11 @@ object GraftExtensions {
     })
 
   /** Idempotently register graft functions + optimizer rules on an
-    * existing session. */
-  def ensure(spark: SparkSession): Unit = {
+    * existing session. Synchronized: builders call it from
+    * `Jobs.run`'s delivery threads, and the check-then-append on
+    * `extraOptimizations` would otherwise lose an update or add the
+    * rule twice. */
+  def ensure(spark: SparkSession): Unit = synchronized {
     val reg = spark.sessionState.functionRegistry
     Seq(fvecDot, simhashLong, minhashSig, bloomMightContain, zorder2,
       mgSummary, bpeCount, bpeTokens, gopherStats, minWindowMd5,

@@ -664,11 +664,26 @@ object Jobs {
         col("enroll_status"))
   }
 
-  /** Run one job: every flat query in its pipeline, then every
-    * (per-term extract × current term), each written gzip-CSV to each
-    * target under the md5-dated daily key (per-term keys
-    * `{group}/{group}-{termId}.gz`, reference jobs.py:41-62). Returns
-    * (query, target, ok) rows; empty for an unknown job. */
+  /** Run one job: the job's pre-step, then every flat query in its
+    * pipeline and every (per-term extract × current term), each
+    * written gzip-CSV to each target under the md5-dated daily key
+    * (per-term keys `{group}/{group}-{termId}.gz`, reference
+    * jobs.py:41-62). Returns (extract, target, ok) rows; empty for an
+    * unknown job.
+    *
+    * Delivery is concurrent. The pre-step runs first and alone (the
+    * reports describe the maintenance it just did). Every other
+    * extract is one task — build, then [[Sinks.fanOut]] — on a fixed
+    * driver pool of `defaultParallelism` threads, so one extract's
+    * builder-side jobs and sink write fill the slots another leaves
+    * idle ([[deliverConcurrently]]). The current terms resolve on the
+    * calling thread while the flat extracts are in flight. The rows
+    * keep the serial order: pre-step, flat extracts in pipeline order,
+    * then per-term extracts in term × query order. Each extract key
+    * is delivered once per run, which is the concurrency `fanOut`
+    * supports, and every catalog face already runs on its own, so the
+    * delivered bytes are those of a serial run (SinksJobsSpec pins
+    * it). */
   def run(job: String, spark: SparkSession, sfDir: String,
           targets: Seq[String], isoDate: String)
       : Seq[(String, String, Boolean)] =
@@ -691,22 +706,69 @@ object Jobs {
           df = step(spark, sfDir, isoDate)
           (target, ok) <- Sinks.fanOut(df, targets, keyFor(extract))
         } yield (extract, target, ok)
-        val flat = for {
-          (name, extract) <- extracts
-          df = SparkEntry.queries(name)(spark, sfDir)
-          (target, ok) <- Sinks.fanOut(df, targets, keyFor(extract))
-        } yield (extract, target, ok)
+        def deliver(extract: String, key: String)(build: => DataFrame)
+            : () => Seq[(String, String, Boolean)] =
+          () => Sinks.fanOut(build, targets, key)
+            .map { case (target, ok) => (extract, target, ok) }
+        val flat = extracts.map { case (name, extract) =>
+          deliver(extract, keyFor(extract))(
+            SparkEntry.queries(name)(spark, sfDir))
+        }
         val termQueries = perTermPipelines.getOrElse(job, Seq.empty)
-        val terms =
-          if (termQueries.nonEmpty) currentTermIds(spark, sfDir)
-          else Seq.empty
-        val perTerm = for {
-          term <- terms
-          (dir, file, q) <- termQueries
-          df = q(spark, sfDir, term)
-          (target, ok) <- Sinks.fanOut(df, targets,
-            Sinks.termKey(isoDate, dir, file, term))
-        } yield (s"$file-$term", target, ok)
-        pre ++ flat ++ perTerm
+        def perTerm() =
+          if (termQueries.isEmpty) Seq.empty
+          else for {
+            term <- currentTermIds(spark, sfDir)
+            (dir, file, q) <- termQueries
+          } yield deliver(s"$file-$term",
+            Sinks.termKey(isoDate, dir, file, term))(q(spark, sfDir, term))
+        pre ++ deliverConcurrently(spark,
+          spark.sparkContext.defaultParallelism, flat, () => perTerm())
     }
+
+  /** The delivery pool behind [[run]]: submit `first` to a fixed pool
+    * of `threads` driver threads, then call `later` on the calling
+    * thread (while `first` is in flight) and submit the tasks it
+    * returns. Returns every task's rows in submission order.
+    *
+    * Each task sets `spark` as its thread's active session, since
+    * builders that reach `SparkSession.active` must not rely on an
+    * inherited thread-local. A failure never leaves Spark jobs running
+    * detached: every submitted task is awaited before the first
+    * failure in submission order (with `later` in its place between
+    * the two batches) is rethrown, and the pool is shut down on every
+    * path. */
+  private[graft] def deliverConcurrently[R](spark: SparkSession,
+      threads: Int, first: Seq[() => Seq[R]],
+      later: () => Seq[() => Seq[R]]): Seq[R] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors,
+      Future}
+    import scala.util.{Failure, Try}
+    val pool = Executors.newFixedThreadPool(math.max(1, threads), r => {
+      val t = new Thread(r, "graft-delivery")
+      t.setDaemon(true)
+      t
+    })
+    def submit(task: () => Seq[R]): Future[Seq[R]] =
+      pool.submit(new Callable[Seq[R]] {
+        def call(): Seq[R] = {
+          SparkSession.setActiveSession(spark)
+          task()
+        }
+      })
+    def await(f: Future[Seq[R]]): Try[Seq[R]] =
+      Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      }
+    try {
+      val head = first.map(submit)
+      val tail = Try(later().map(submit))
+      // `later` contributes no rows, only its failure, in its place
+      val outcomes = head.map(await) ++
+        Seq(tail.map(_ => Seq.empty[R])) ++
+        tail.getOrElse(Seq.empty).map(await)
+      outcomes.collectFirst { case Failure(e) => e }.foreach(e => throw e)
+      outcomes.flatMap(_.get)
+    } finally pool.shutdown()
+  }
 }

@@ -357,11 +357,13 @@ object Partitioning {
     * Semantics: within each `partCol` group, rows take the
     * deterministic order (md5(idCol), idCol) and a running `weightCol`
     * total; `shard` = floor((cum - weight) / budget) — the shard the
-    * row STARTS in. A single window per group would compute this with
-    * ONE reducer per group — a hot source serializes at 100 TB. The
-    * md5 order key makes the fix free: its FIRST HEX CHAR is a prefix
-    * of the order key, so ordering hierarchically by (hex₁, md5) IS
-    * the flat md5 order. Each of the 16 sub-buckets windows
+    * row STARTS in. NULL ids are kept, first in their group, as the
+    * plain window orders them (PartitioningSpec pins it). A single
+    * window per group would compute this with ONE reducer per group —
+    * a hot source serializes at 100 TB. The md5 order key makes the
+    * fix free: its FIRST HEX CHAR is a prefix of the order key, so
+    * ordering hierarchically by (hex₁, md5) IS the flat md5 order.
+    * Each of the 16 sub-buckets windows
     * independently (16× the parallelism per group), their per-group
     * totals prefix-sum over a ≤ 16·|groups|-row aggregate (one tiny
     * window over the totals, ordered by the bucket hex char — the
@@ -411,12 +413,16 @@ object Partitioning {
       .orderBy(col("__ord"), col(idCol))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    // null-safe equality on the group key — a plain equi-join would
-    // silently drop every NULL-keyed row the window just processed
+    // null-safe equality on the group key AND the sub-bucket: a plain
+    // equi-join would silently drop every NULL-keyed row the window
+    // just processed, and a NULL idCol hashes to a NULL bucket. NULL
+    // ids form their own sub-bucket, first in its group (the plain
+    // window's ascending NULLS FIRST order); like duplicate ids they
+    // are order peers, so only their weights' sum is deterministic
     base
       .withColumn("__cum", sum(weightCol).over(w))
       .join(offDf,
-        col(partCol) <=> col("__p") && col("__bkt") === col("__b"))
+        col(partCol) <=> col("__p") && col("__bkt") <=> col("__b"))
       .drop("__p", "__b")
       .withColumn("shard",
         floor((col("__off") + col("__cum") - col(weightCol)) / budget))

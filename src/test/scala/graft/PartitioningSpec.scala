@@ -232,6 +232,36 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
     assert(got.size == 6, "no row may vanish, NULL-keyed or not")
   }
 
+  test("packShards keeps NULL-id rows as their own first sub-bucket, " +
+      "equal to the single-window reference") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // a NULL id hashes to a NULL bucket; an equi-join on the bucket
+    // dropped those rows silently. Equal NULL-id weights keep the
+    // check order-independent (NULL ids are order peers)
+    val d = Seq(
+      (Some(1L), "a", 100L), (None, "a", 250L), (None, "a", 250L),
+      (Some(2L), "a", 300L), (Some(3L), "a", 50L), (None, "b", 80L))
+      .toDF("doc_id", "source", "n_tokens")
+    val w = Window.partitionBy("source")
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("source", "doc_id", "shard").collect()
+        .map(r => (r.getString(0), Option(r.get(1)), r.getLong(2)))
+        .sortBy(_.toString).toSeq
+    val ref = rows(d.withColumn("cum", sum("n_tokens").over(w))
+      .withColumn("shard",
+        floor((col("cum") - col("n_tokens")) / 200L)))
+    val got = rows(Partitioning
+      .packShards(d, "source", "doc_id", "n_tokens", 200L))
+    assert(got.size == 6, s"a NULL-id row vanished: $got")
+    assert(got == ref)
+    // NULL ids sort first: they fill group a's shard 0 and shard 1
+    assert(got.filter(_._2.isEmpty).map(_._3).sorted ==
+      Seq(0L, 0L, 1L))
+  }
+
   test("bucketed-to-bucketed join plans without a shuffle exchange") {
     val o = Tables(spark, sf, "orders").select("o_orderkey", "o_custkey")
     val c = Tables(spark, sf, "customer").select("c_custkey", "c_name")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.{Jobs, Sinks}
@@ -232,6 +233,183 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
       assert(new java.io.File(s"$dir/$t/$key").exists(),
         s"missing $t/$key")
     }
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. A
+    * one-task sentinel job drains the listener bus before and after:
+    * the bus delivers one queue's events in order, so the sentinel's
+    * end event comes after every earlier job's start event. */
+  private def countSparkJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val mark = "graft.spec.sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val sentinels = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile var drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(mark) != null))
+          sentinels.add(e.jobId)
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (sentinels.contains(e.jobId)) drained.countDown()
+    }
+    def drain(): Unit = {
+      drained = new java.util.concurrent.CountDownLatch(1)
+      sc.setLocalProperty(mark, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(mark, null)
+      assert(drained.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job's end")
+    }
+    sc.addSparkListener(l)
+    try {
+      drain()
+      started.set(0)
+      val out = body
+      drain()
+      (out, started.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Decompressed CSV bytes of every extract key under `target`, by
+    * key relative to the target (part files in name order). */
+  private def extractBytes(target: String): Map[String, String] = {
+    val root = new java.io.File(target).toPath
+    val keys = Files.walk(root).iterator()
+    val out = Map.newBuilder[String, String]
+    while (keys.hasNext) {
+      val p = keys.next()
+      if (Files.isDirectory(p) && p.getFileName.toString.endsWith(".gz")) {
+        val text = p.toFile.listFiles()
+          .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+          .map { f =>
+            val in = new java.util.zip.GZIPInputStream(
+              new java.io.FileInputStream(f))
+            try new String(in.readAllBytes(), "UTF-8") finally in.close()
+          }.mkString
+        out += root.relativize(p).toString -> text
+      }
+    }
+    out.result()
+  }
+
+  for (job <- Seq("upload_snapshot", "curate_corpus"))
+    test(s"$job: concurrent delivery equals a serial replay — same " +
+        "bytes, same row order, no extra Spark jobs") {
+      val dir = Files.createTempDirectory("jobs_overlap_spec").toString
+      val date = "2024-01-01"
+      val (conc, concJobs) = countSparkJobs(
+        Jobs.run(job, spark, sf, Seq(s"$dir/conc"), date))
+      // the serial replay: Jobs.run's deliveries one after another,
+      // each built then fanned out, from the public pipeline tables
+      val (serial, serialJobs) = countSparkJobs {
+        val t = Seq(s"$dir/serial")
+        def deliver(extract: String, key: String, df: => DataFrame) =
+          Sinks.fanOut(df, t, key).map { case (tg, ok) => (extract, tg, ok) }
+        val flat = Jobs.pipelines(job).flatMap { case (name, extract) =>
+          deliver(extract, Sinks.dailyKey(date, extract),
+            SparkEntry.queries(name)(spark, sf))
+        }
+        val termQueries = Jobs.perTermPipelines.getOrElse(job, Seq.empty)
+        val terms =
+          if (termQueries.nonEmpty) Jobs.currentTermIds(spark, sf)
+          else Seq.empty
+        val perTerm = for {
+          term <- terms
+          (d, file, q) <- termQueries
+          row <- deliver(s"$file-$term", Sinks.termKey(date, d, file, term),
+            q(spark, sf, term))
+        } yield row
+        flat ++ perTerm
+      }
+      assert(conc.forall(_._3) && serial.forall(_._3),
+        s"failed deliveries: $conc / $serial")
+      assert(conc.map(r => (r._1, r._3)) == serial.map(r => (r._1, r._3)),
+        "result rows changed order")
+      val concBytes = extractBytes(s"$dir/conc")
+      val serialBytes = extractBytes(s"$dir/serial")
+      assert(concBytes.size == conc.size && concBytes.keySet ==
+        serialBytes.keySet, s"keys: ${concBytes.keySet}")
+      for ((key, bytes) <- serialBytes)
+        assert(concBytes(key) == bytes, s"$key: bytes differ")
+      // overlap adds no Spark job. It may save one: extracts that
+      // persist an identical plan (dd_curation_pipeline and
+      // dd_leakage_safe_split both band the same documents) share
+      // Spark's cache entry while both are in flight, so the second
+      // reads bands the first already materialized. Whether that
+      // happens depends on timing, so only the bound is pinned
+      assert(concJobs <= serialJobs,
+        s"overlap added work: $concJobs vs $serialJobs Spark jobs")
+    }
+
+  test("deliverConcurrently waits for every task, then rethrows the " +
+      "first failure in submission order") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+    val done = new ConcurrentLinkedQueue[String]()
+    val lateFail = new CountDownLatch(1)
+    def slowJob(name: String): () => Seq[String] = () => {
+      // a real Spark job still running when the failures are raised
+      spark.range(4).repartition(4).foreachPartition {
+        (_: Iterator[java.lang.Long]) => Thread.sleep(1500) }
+      done.add(name)
+      Seq(name)
+    }
+    val failFirst: () => Seq[String] = () => {
+      lateFail.await() // fails AFTER the later task failed
+      throw new IllegalStateException("first")
+    }
+    val failLater: () => Seq[String] = () => {
+      lateFail.countDown()
+      throw new IllegalArgumentException("later")
+    }
+    val e = intercept[IllegalStateException] {
+      Jobs.deliverConcurrently(spark, 4,
+        Seq(failFirst, slowJob("a")), () => Seq(failLater, slowJob("b")))
+    }
+    assert(e.getMessage == "first")
+    assert(done.toArray.toSet == Set("a", "b"),
+      s"returned before every delivery finished: $done")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a Spark job kept running detached")
+    // the pool is shut down on the failure path too
+    val deadline = System.nanoTime() + 10e9.toLong
+    def poolAlive = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread])
+      .exists(t => t.getName == "graft-delivery" && t.isAlive)
+    while (poolAlive && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(!poolAlive, "delivery threads outlived the call")
+  }
+
+  test("deliverConcurrently: a failing `later` is rethrown after the " +
+      "first batch finished; rows keep submission order") {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Jobs.deliverConcurrently(spark, 2,
+        Seq(() => { Thread.sleep(500); done.set(true); Seq(1) }),
+        () => throw new IllegalStateException("terms"))
+    }
+    assert(e.getMessage == "terms" && done.get())
+    // later tasks append after the first batch, whatever finishes first
+    val rows = Jobs.deliverConcurrently(spark, 4,
+      Seq(() => { Thread.sleep(300); Seq(1, 2) }, () => Seq(3)),
+      () => Seq(() => Seq(4), () => { Thread.sleep(100); Seq(5) }))
+    assert(rows == Seq(1, 2, 3, 4, 5))
+  }
+
+  test("deliverConcurrently sets the job's session active in each task") {
+    val other = spark.newSession()
+    val seen = new java.util.concurrent.atomic.AtomicReference[Seq[Boolean]]
+    val t = new Thread(() => {
+      SparkSession.setActiveSession(other)
+      seen.set(Jobs.deliverConcurrently(spark, 2,
+        Seq.fill(3)(() => Seq(SparkSession.active eq spark)),
+        () => Seq.empty))
+    })
+    t.start()
+    t.join()
+    assert(seen.get == Seq(true, true, true))
   }
 
   test("release_corpus job ships the card/drift/mix/merges/privacy pack") {

@@ -30,6 +30,24 @@ class SqlInterfaceSpec extends AnyFunSuite with SharedSpark {
     assert(selfSim > 0.0)
   }
 
+  test("ensure from 8 concurrent threads installs the optimizer rule " +
+      "exactly once") {
+    // fresh session states (shared context): no rule installed yet.
+    // Several rounds, since one round rarely hits the race window
+    for (_ <- 1 to 10) {
+      val s = spark.newSession()
+      val start = new java.util.concurrent.CyclicBarrier(8)
+      val threads = (1 to 8).map { _ =>
+        new Thread(() => { start.await(); GraftExtensions.ensure(s) })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(s.experimental.extraOptimizations
+        .count(_ == graft.plans.NativeVectorOps) == 1)
+      assert(s.catalog.functionExists("fvec_dot"))
+    }
+  }
+
   test("native fns reject out-of-range literal args at analysis time") {
     GraftExtensions.ensure(spark)
     Tables(spark, sf, "documents").createOrReplaceTempView("documents")
