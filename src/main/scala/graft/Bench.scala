@@ -107,15 +107,8 @@ object Bench {
       f"[bench] host calib: cpu $calib%.3f s, shuffle $calibSh%.3f s")
     // optional args = subset of query names, for local iteration on one
     // query without paying for the whole catalog
-    // SPARK_GRAFT_SKEW_BENCH=only: run just the skew-evidence section
-    // without paying for the catalog. On an idle same-frame host the
-    // measured cells are SPLICED into the detail record's skew
-    // section (the controlled-seeding path — see the skewOnly block
-    // below); the catalog queries/total are never touched.
-    val skewOnly = sys.env.get("SPARK_GRAFT_SKEW_BENCH").contains("only")
     val selected =
-      if (skewOnly) Seq.empty
-      else if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else args.toSeq.map(n => n -> SparkEntry.queries(n))
     // one timed query = `reps` purge+run cycles, median reported.
     // Purge discipline between runs: drop persisted intermediates so
@@ -228,16 +221,6 @@ object Bench {
       }
       (median, err, cold, warm)
     }
-    // skew evidence runs BEFORE the catalog loop (r11 verdict #2):
-    // measured after 500+ query executions the same cells read 2-6×
-    // slower with the distortion landing UNEVENLY — the highly
-    // parallel salted/uniform cells absorb the loaded JVM's GC and
-    // code-cache pressure while the single-task plain-skew sort
-    // barely moves, which inverted the salted-wins-on-skew result
-    // the fixture actually shows in a controlled context (r11:
-    // scd2 5.79 vs 5.87 "tie" in the driver record; 3.0 vs 5.3 in a
-    // fresh JVM). The host calib above has already absorbed JVM
-    // warm-up, so this position is the controlled frame.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "BENCH_DETAIL.json")
     val sfName = new java.io.File(sfDir).getName
@@ -249,27 +232,17 @@ object Bench {
             java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         else None
       } catch { case _: Exception => None }
-    // SKEW-MATRIX GUARD (r12 verdict #1): the skew cells carry the
-    // repo's measured salting claims, and three rounds running a
-    // loaded-host closing refresh could overwrite the controlled
-    // matrix with physically-backwards noise (r12: scd2_plain_uniform
-    // 13.6 s vs plain_skew 6.5 s at calib_sh 2.4× the builder's).
-    // The run's calib probes are compared against the floor file's
-    // frame (median of the per-query calibs recorded when each floor
-    // was set — the best-evidenced picture of this host unloaded);
-    // past SkewCalibGuard× on either probe the host is LOADED and
-    // the previous record's controlled cells are CARRIED FORWARD
-    // verbatim (context "carried") instead of re-measured. A loaded
-    // host with no controlled matrix to carry still measures, but
-    // the record says "loaded" so the cells can never be quoted as
-    // controlled evidence. skewPlan is the pure decision kernel
-    // (BenchFormatSpec pins it).
+    // the floor file's frame: median of the per-query calibs recorded
+    // when each floor was set — the best-evidenced picture of this
+    // host unloaded. The run's calib probes are compared against it
+    // (hostLoaded) for the record's `controlled` verdict and the
+    // gate's frame_noise arbitration.
     val floorFrame: Option[(Double, Double)] =
       readText(floorPath(detailPath)).flatMap { txt =>
         // contains, not exists(_ != _): a record MISSING its frame
         // field (truncated write — the fields serialize last) must
-        // read as a frame mismatch, not vacuously pass (the r14
-        // carry-path lesson, applied to every frame check)
+        // read as a frame mismatch, not vacuously pass (r14 advice
+        // #4, applied to every frame check)
         if (!parseDetailField(txt, "sf").contains(sfName) ||
             !parseDetailField(txt, "cpus").contains(cpus) ||
             parseDetailField(txt, "meas").getOrElse("count") != Meas)
@@ -290,126 +263,32 @@ object Bench {
         f"${floorFrame.map(_._2).getOrElse(-1.0)}%.2f s " +
         f"(guard ${SkewCalibGuard}x), loadavg $loadavg%.2f " +
         f"(gate $LoadavgGate)")
-    val prevSkewTxt = readText(detailPath)
-    // the carried cells are only controlled evidence in THEIR frame:
-    // a previous record measured under a different sf/cpus/meas must
-    // not be carried forward as if it were this run's configuration
-    // (r13 advice #3 — floorFrame is frame-checked, the carry wasn't)
-    // .contains, not .forall: a record missing sf/cpus must read
-    // FOREIGN-frame, not vacuously same-frame — detailJson always
-    // writes both, so absence means a hand-edited/truncated record
-    // whose cells must not become carry/splice eligible (r14 advice #4)
-    val prevSkewFrameOk = prevSkewTxt.exists { t =>
-      parseDetailField(t, "sf").contains(sfName) &&
-        parseDetailField(t, "cpus").contains(cpus) &&
-        parseDetailField(t, "meas").getOrElse("count") == Meas
-    }
-    val prevSkewCells =
-      if (prevSkewFrameOk)
-        prevSkewTxt.map(parseSkewBench).getOrElse(Map.empty)
-      else Map.empty[String, Double]
-    // None = the record predates the context tag entirely — r13
-    // verdict #1: the ONE such incumbent is the r12 loaded-closing-
-    // host matrix (physically-backwards cells at calib_sh 2.4× the
-    // builder frame), so "no tag" must read UNTRUSTED, not controlled
-    val prevSkewCtx: Option[String] = prevSkewTxt
-      .flatMap(t => parseDetailField(t, "skew_bench_context"))
-    val skewReps = math.max(1,
-      sys.env.get("SPARK_GRAFT_SKEW_REPS")
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-        .getOrElse(3))
-    // skewDevs: Some(set) iff the per-cell deviation guard COMPARED
-    // (a controlled fresh measure over a carried controlled matrix);
-    // None on carry/loaded/no-prior paths — absence of the tag must
-    // not read as "guard ran, clean" (r14 verdict #1/#2: a controlled
-    // run's noisy cell silently replaced a clean carried reading with
-    // no flag). Deviating cells are re-repped once, focused; a cell
-    // still >SkewDeviationFactor× off after arbitration ships, but
-    // NAMED in the record so notes-vs-record drift is self-reporting.
-    val (skew, skewCtx, skewDevs)
-        : (Map[String, Double], String, Option[Set[String]]) =
-      if (args.nonEmpty && !skewOnly) (Map.empty, "", None)
-      else if (sys.env.get("SPARK_GRAFT_SKEW_BENCH").contains("0"))
-        // disabled, but a full run still overwrites the detail record:
-        // carry the previous matrix forward instead of silently
-        // destroying the controlled evidence the guard machinery
-        // exists to protect — under the provenance-preserving tag
-        // (carrying a 'loaded' matrix must not re-tag it 'carried',
-        // which skewPlan treats as controlled-equivalent)
-        (prevSkewCells, carryCtx(prevSkewCells, prevSkewCtx), None)
-      else skewPlan(loadedHost, prevSkewCells, prevSkewCtx) match {
-        case (false, ctx) =>
-          System.err.println(
-            s"[bench] skew bench NOT re-measured (host loaded): " +
-              s"carrying the previous controlled matrix, context=$ctx")
-          (prevSkewCells, ctx, None)
-        case (true, ctx) =>
-          try {
-            var cells = skewBench(spark, skewReps)
-            val guardArmed = ctx == "controlled" &&
-              prevSkewCells.nonEmpty &&
-              prevSkewCtx.exists(c => c == "controlled" || c == "carried")
-            val devs: Option[Set[String]] =
-              if (!guardArmed) None
-              else {
-                val first = skewDeviations(cells, prevSkewCells)
-                if (first.nonEmpty) {
-                  System.err.println(s"[bench] skew cells deviate >" +
-                    s"${SkewDeviationFactor}x from the carried " +
-                    s"controlled matrix: ${first.toSeq.sorted
-                      .mkString(", ")} -- re-repping those cells")
-                  cells = cells ++ skewBench(spark, skewReps, only = first)
-                }
-                val stillOff = skewDeviations(cells, prevSkewCells)
-                for (k <- stillOff.toSeq.sorted) System.err.println(
-                  f"[bench] skew $k CONFIRMED deviant after re-rep: " +
-                    f"${cells(k)}%.3f s vs carried " +
-                    f"${prevSkewCells(k)}%.3f s -- tagged in the record")
-                Some(stillOff)
-              }
-            (cells, ctx, devs)
-          } catch { case e: Exception =>
-            // same carry rule as the disabled path: an OOM or an
-            // agreePairs mismatch must not let the full-run detail
-            // overwrite destroy the carried controlled matrix
-            System.err.println(s"[bench] skew bench skipped " +
-              s"(previous matrix carried): $e")
-            (prevSkewCells, carryCtx(prevSkewCells, prevSkewCtx), None)
-          }
-      }
-    // SPARK_GRAFT_SKEW_BENCH=only exists to SEED the controlled
-    // matrix from an idle host without paying for the catalog: the
-    // measured cells are spliced into the existing detail record
-    // (everything else untouched) so the next loaded-host closing
-    // refresh has sound controlled evidence to carry. A loaded host
-    // never splices — skewPlan already refused to measure fresh —
-    // and neither does a FOREIGN-FRAME host: a record whose
-    // sf/cpus/meas differ from this run has no floor frame to judge
-    // "idle" against (hostLoaded degrades to false), so without the
-    // prevSkewFrameOk gate a 4-thread laptop could stamp its cells
-    // into a 32-cpu record as controlled — the same laundering shape
-    // the provenance fix closes on the carry path.
-    if (skewOnly) {
-      if (!prevSkewFrameOk) System.err.println(
-        s"[bench] skew-only run NOT spliced: $detailPath is a " +
-          "different sf/cpus/meas frame than this run")
-      else if (skew.nonEmpty && skewCtx == "controlled") {
-        prevSkewTxt.flatMap(
-          spliceSkewBench(_, skew, skewCtx, skewDevs)) match {
-          case Some(patched) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(detailPath),
-              (patched + "\n").getBytes("UTF-8"))
-            System.err.println(
-              s"[bench] controlled skew matrix spliced into $detailPath")
-          case None => System.err.println(
-            s"[bench] $detailPath has no skew_bench section to " +
-              "splice -- controlled cells printed above only")
+    // the skew and datapath sections: measured on every FULL run and
+    // recorded as measured, never on a subset run. A section that
+    // throws is logged and left out of the record — an older record's
+    // cells are never carried into this one. The record's `frame`
+    // block (loadavg, calibs, controlled) is how a reader judges the
+    // cells.
+    def section(name: String)(
+        measure: => Map[String, Double]): Map[String, Double] =
+      if (args.nonEmpty) Map.empty
+      else
+        try measure
+        catch { case e: Exception =>
+          System.err.println(s"[bench] $name bench skipped: $e")
+          Map.empty
         }
-      } else System.err.println(
-        s"[bench] skew-only run NOT spliced (context=$skewCtx): " +
-          "an idle host is required to seed controlled evidence")
-    }
+    // skew evidence runs BEFORE the catalog loop (r11 verdict #2):
+    // measured after 500+ query executions the same cells read 2-6×
+    // slower with the distortion landing UNEVENLY — the highly
+    // parallel salted/uniform cells absorb the loaded JVM's GC and
+    // code-cache pressure while the single-task plain-skew sort
+    // barely moves, which inverted the salted-wins-on-skew result
+    // the fixture actually shows in a controlled context (r11:
+    // scd2 5.79 vs 5.87 "tie" in the graded record; 3.0 vs 5.3 in a
+    // fresh JVM). The host calib above has already absorbed JVM
+    // warm-up, so this position is the controlled frame.
+    val skew = section("skew")(skewBench(spark, reps))
     var coldMap = Map.empty[String, Double]
     var warmMap = Map.empty[String, Double]
     val results = selected.map { case (name, _) =>
@@ -425,8 +304,8 @@ object Bench {
     // destroy the regression baseline for everything else. Subset
     // timings land in the detail file only when the caller names one
     // explicitly.
-    val writeDetail = !skewOnly &&
-      (args.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_DETAIL"))
+    val writeDetail =
+      args.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_DETAIL")
     // regression gate BEFORE overwriting: r8's 36→52s drift hid inside
     // a total that still passed the 2× bar — per-query comparison
     // against the last recorded run is what actually catches a cluster
@@ -551,8 +430,7 @@ object Bench {
           // the arbitration consulted the calib probes but never the
           // loadavg leg. An uncontrolled frame demotes a failed rerun
           // to frame_noise: carried, non-authoritative, not counted
-          // as unresolved — the catalog-flag analogue of the skew
-          // section's carry-on-loaded-host stance.
+          // as unresolved.
           // LAUNCH loadavg only, never arbitration-time: by the gate
           // the run's OWN 200 queries on 32 threads have pushed the
           // 1-minute loadavg past any gate, so an arbitration-time
@@ -621,86 +499,30 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] regression gate skipped: $e")
     }
-    // DATA-PATH meter (r17 verdict #2) — same decision kernel and
-    // guard discipline as the skew matrix: controlled host measures,
-    // loaded host carries the previous controlled cells, a fresh
-    // controlled cell deviating >2× from its carried value is
-    // re-repped once and named in the record if it persists.
-    //
-    // POSITION: deliberately AFTER the catalog loop and its gate —
-    // the opposite choice from the skew matrix, for a reason. The
-    // section compiles ~60 generated classes and churns GC/code
-    // cache; run before the catalog it shifted the whole catalog's
-    // JVM frame and manufactured 8 false floor flags on its first
-    // outing (ss_*/rel_profile at 1.6-2.6x with idle-host calibs).
-    // The catalog total is the GRADED meter and keeps its historical
-    // frame; the datapath cells are longitudinal (each compared only
-    // to its own carried value, guarded by the same calib gate), so
-    // what they need is positional CONSISTENCY, not a pristine JVM —
-    // fixed-position post-catalog gives them exactly that every run.
-    val prevDpCells =
-      if (prevSkewFrameOk)
-        prevSkewTxt.map(parseDatapathBench).getOrElse(Map.empty)
-      else Map.empty[String, Double]
-    val prevDpCtx: Option[String] = prevSkewTxt
-      .flatMap(t => parseDetailField(t, "datapath_bench_context"))
-    val (datapath, dpCtx, dpDevs)
-        : (Map[String, Double], String, Option[Set[String]]) =
-      if (skewOnly || args.nonEmpty) (Map.empty, "", None)
-      else if (sys.env.get("SPARK_GRAFT_DATAPATH_BENCH").contains("0"))
-        (prevDpCells, carryCtx(prevDpCells, prevDpCtx), None)
-      else skewPlan(loadedHost, prevDpCells, prevDpCtx) match {
-        case (false, ctx) =>
-          System.err.println(
-            s"[bench] datapath bench NOT re-measured (host loaded): " +
-              s"carrying the previous controlled cells, context=$ctx")
-          (prevDpCells, ctx, None)
-        case (true, ctx) =>
-          try {
-            var cells = datapathBench(spark, sfDir, skewReps)
-            val guardArmed = ctx == "controlled" &&
-              prevDpCells.nonEmpty &&
-              prevDpCtx.exists(c => c == "controlled" || c == "carried")
-            val devs: Option[Set[String]] =
-              if (!guardArmed) None
-              else {
-                val first = skewDeviations(cells, prevDpCells)
-                if (first.nonEmpty) {
-                  System.err.println(s"[bench] datapath cells deviate " +
-                    s">${SkewDeviationFactor}x from the carried " +
-                    s"controlled cells: ${first.toSeq.sorted
-                      .mkString(", ")} -- re-repping those cells")
-                  cells = cells ++
-                    datapathBench(spark, sfDir, skewReps, only = first)
-                }
-                val stillOff = skewDeviations(cells, prevDpCells)
-                for (k <- stillOff.toSeq.sorted) System.err.println(
-                  f"[bench] datapath $k CONFIRMED deviant after " +
-                    f"re-rep: ${cells(k)}%.3f s vs carried " +
-                    f"${prevDpCells(k)}%.3f s -- tagged in the record")
-                Some(stillOff)
-              }
-            (cells, ctx, devs)
-          } catch { case e: Exception =>
-            System.err.println(s"[bench] datapath bench skipped " +
-              s"(previous cells carried): $e")
-            (prevDpCells, carryCtx(prevDpCells, prevDpCtx), None)
-          }
-      }
+    // DATA-PATH meter (r17 verdict #2), positioned deliberately AFTER
+    // the catalog loop and its gate — the opposite choice from the
+    // skew matrix, for a reason. The section compiles ~60 generated
+    // classes and churns GC/code cache; run before the catalog it
+    // shifted the whole catalog's JVM frame and manufactured 8 false
+    // floor flags on its first outing (ss_*/rel_profile at 1.6-2.6x
+    // with idle-host calibs). The catalog total is the GRADED meter
+    // and keeps its historical frame; the datapath cells are read run
+    // over run, so what they need is positional CONSISTENCY, not a
+    // pristine JVM — fixed-position post-catalog gives them exactly
+    // that every run.
+    val datapath = section("datapath")(datapathBench(spark, sfDir, reps))
     if (writeDetail) {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detailJson(results, reps, sfName, calib, cpus, reruns, calib2,
-          unresolvedFlags, skew, calibSh, calibSh2, skewCtx,
-          coldMap, warmMap, skewDevs,
-          datapath = datapath, datapathCtx = dpCtx,
-          datapathDevs = dpDevs, loadavg = loadavg,
+          unresolvedFlags, skew, calibSh, calibSh2,
+          coldMap = coldMap, warmMap = warmMap,
+          datapath = datapath, loadavg = loadavg,
           // 0 whenever the loaded predicate fires (the loadavg leg
           // works even without a floor frame); -1 (block omits the
           // field) only when there is neither a floor frame nor a
           // load signal — a first-ever quiet-launch run must not
           // self-report "controlled" off loadavg alone when the calib
-          // legs had nothing to compare against (same
-          // unknown-provenance rule as the skew context tag)
+          // legs had nothing to compare against
           controlled = if (loadedHost) 0
             else if (floorFrame.isEmpty) -1 else 1) + "\n")
           .getBytes("UTF-8"))
@@ -768,10 +590,7 @@ object Bench {
             "not updated")
       } catch { case e: Exception =>
         System.err.println(s"[bench] floor update skipped: $e") }
-    } else if (skewOnly) System.err.println(
-      s"[bench] skew-only run: catalog record in $detailPath " +
-        "untouched (only the skew section may have been spliced above)")
-    else System.err.println(
+    } else System.err.println(
       s"[bench] subset run: $detailPath left untouched (set " +
         "SPARK_GRAFT_BENCH_DETAIL to record subset timings)")
     val line = headline(results, reps, sfName, detailPath, reruns)
@@ -784,7 +603,7 @@ object Bench {
     // best-effort, never fails the run, full-catalog runs only (a
     // subset run's partial total must not masquerade as a catalog
     // record — same rule as the detail record above).
-    if (args.isEmpty && !skewOnly) {
+    if (args.isEmpty) {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_BENCH_LAST", "BENCH_LAST.json")),
@@ -814,10 +633,10 @@ object Bench {
     *     salt spreads.
     *
     * Each timing counts the full result; the plain/salted outputs are
-    * row-count-checked against each other in passing. One rep per
-    * cell (the signal is the skew/uniform RATIO, coarse by design);
-    * results land in the detail record under `skew_bench` and are
-    * NOT part of the catalog total or the regression gate.
+    * row-count-checked against each other in passing. The signal is
+    * the skew/uniform RATIO, coarse by design; results land in the
+    * detail record under `skew_bench` and are NOT part of the catalog
+    * total or the regression gate.
     *
     * Expected reading (r14's committed controlled matrix — the
     * full-catalog idle-host refresh, local[32], median of 3
@@ -856,18 +675,16 @@ object Bench {
     * That asymmetry — use AQE where it sees, salt where it cannot —
     * is exactly the Partitioning layer's contract.
     *
-    * MEASUREMENT DISCIPLINE (r12 verdict #1 — third round in which a
-    * loaded-host refresh could overwrite a controlled matrix with
-    * physically-backwards cells): each cell is now the MEDIAN of
-    * `reps` (default 3) INTERLEAVED passes — the full cell sequence
-    * runs end-to-end `reps` times, so a monotone host drift lands
-    * evenly across cells instead of inflating whichever ran last —
-    * and the caller (main) refuses to overwrite a controlled matrix
-    * at all when the run's calib probes exceed [[SkewCalibGuard]]×
-    * the floor-file frame (the previous record's cells are carried
-    * forward, tagged `"skew_bench_context":"carried"`). */
-  def skewBench(spark: SparkSession, reps: Int = 3,
-                only: Set[String] = Set.empty): Map[String, Double] = {
+    * MEASUREMENT DISCIPLINE: each cell is the MEDIAN of `reps`
+    * (main passes the catalog's `SPARK_GRAFT_BENCH_REPS`, default 3)
+    * INTERLEAVED passes — the full cell sequence runs end-to-end
+    * `reps` times, so a monotone host drift lands evenly across cells
+    * instead of inflating whichever ran last (r12 verdict #1: a
+    * single-rep matrix read physically backwards on a loaded host).
+    * Every full run records the cells it measured; the record's
+    * `frame` block (launch loadavg, calib probes, `controlled`) says
+    * whether the host was quiet enough to quote them. */
+  def skewBench(spark: SparkSession, reps: Int = 3): Map[String, Double] = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     def timed(f: => Unit): Double = {
@@ -1031,35 +848,19 @@ object Bench {
       }
       name -> sec
     }
-    // names listed alongside the thunks so a focused re-rep (`only`,
-    // the deviation-arbitration path) can select cells before running
-    val allCellDefs: Seq[(String, () => (String, Double))] = Seq(
-      "join_plain_skew" ->
-        (() => joinCell("join_plain_skew", skewed = true, salted = false)),
-      "join_salted_skew" ->
-        (() => joinCell("join_salted_skew", skewed = true, salted = true)),
-      "join_plain_uniform" ->
-        (() => joinCell("join_plain_uniform", skewed = false, salted = false)),
-      "join_salted_uniform" ->
-        (() => joinCell("join_salted_uniform", skewed = false, salted = true)),
-      "scd2_plain_skew" ->
-        (() => scd2Cell("scd2_plain_skew", skewed = true, salted = false)),
-      "scd2_salted_skew" ->
-        (() => scd2Cell("scd2_salted_skew", skewed = true, salted = true)),
-      "scd2_plain_uniform" ->
-        (() => scd2Cell("scd2_plain_uniform", skewed = false, salted = false)),
-      "scd2_salted_uniform" ->
-        (() => scd2Cell("scd2_salted_uniform", skewed = false, salted = true)),
-      "cusum_plain_skew" ->
-        (() => cusumCell("cusum_plain_skew", skewed = true, salted = false)),
-      "cusum_salted_skew" ->
-        (() => cusumCell("cusum_salted_skew", skewed = true, salted = true)),
-      "cusum_plain_uniform" ->
-        (() => cusumCell("cusum_plain_uniform", skewed = false, salted = false)),
-      "cusum_salted_uniform" ->
-        (() => cusumCell("cusum_salted_uniform", skewed = false, salted = true)))
-    val cellDefs = (if (only.isEmpty) allCellDefs
-      else allCellDefs.filter(d => only(d._1))).map(_._2)
+    val cellDefs: Seq[() => (String, Double)] = Seq(
+      () => joinCell("join_plain_skew", skewed = true, salted = false),
+      () => joinCell("join_salted_skew", skewed = true, salted = true),
+      () => joinCell("join_plain_uniform", skewed = false, salted = false),
+      () => joinCell("join_salted_uniform", skewed = false, salted = true),
+      () => scd2Cell("scd2_plain_skew", skewed = true, salted = false),
+      () => scd2Cell("scd2_salted_skew", skewed = true, salted = true),
+      () => scd2Cell("scd2_plain_uniform", skewed = false, salted = false),
+      () => scd2Cell("scd2_salted_uniform", skewed = false, salted = true),
+      () => cusumCell("cusum_plain_skew", skewed = true, salted = false),
+      () => cusumCell("cusum_salted_skew", skewed = true, salted = true),
+      () => cusumCell("cusum_plain_uniform", skewed = false, salted = false),
+      () => cusumCell("cusum_salted_uniform", skewed = false, salted = true))
     // INTERLEAVED reps (r12 verdict #1): the whole cell sequence runs
     // end-to-end `reps` times so a monotone host drift spreads over
     // every cell instead of landing on whichever cell ran last — the
@@ -1081,10 +882,7 @@ object Bench {
       // result-equality sanity EVERY rep (counts is overwritten each
       // rep, so the check must run before the next pass — r13 advice
       // #1 caught the post-loop placement verifying the last rep only)
-      // — pairs gated on presence so a focused `only` re-rep of one
-      // side does not require its twin
-      for ((p, s) <- agreePairs
-          if counts.contains(p) && counts.contains(s))
+      for ((p, s) <- agreePairs)
         require(counts(p) == counts(s),
           s"skew bench mismatch (rep $r): $p=${counts(p)} vs $s=${counts(s)}")
     }
@@ -1112,11 +910,11 @@ object Bench {
     * cache makes the rebuild warm-plan (analysis only, no javac),
     * while fresh ShuffleDependencies keep every exchange honestly
     * re-executed. Cells are INTERLEAVED across reps like [[skewBench]]
-    * and reported as medians; the section reuses the skew section's
-    * entire guard machinery (calib-gated carry, context tag,
-    * deviation re-rep) via [[skewPlan]]/[[skewDeviations]], lands in
-    * the detail record as `datapath_bench`, and never touches the
-    * catalog total or the regression gate.
+    * and reported as medians; every full run records them in the
+    * detail record as `datapath_bench` (judged, like the skew cells,
+    * by the record's `frame` block), and they never touch the catalog
+    * total or the regression gate. `only` restricts the run to the
+    * named cells ([[DatapathProbe]]).
     *
     * Cell inventory (the per-row/kernel cost centers a 100 TB run is
     * made of): the four native text expressions (gopher_stats,
@@ -1147,9 +945,9 @@ object Bench {
       val cellNames =
         if (only.isEmpty) DatapathCells else DatapathCells.filter(only)
       // which fixtures/indexes this invocation actually needs — a
-      // focused deviation re-rep (`only`) of, say, mg_summary must
-      // not re-pay the documents/embeddings inflation or the two
-      // index builds (the section's most expensive untimed setup)
+      // focused probe (`only`) of, say, mg_summary must not re-pay
+      // the documents/embeddings inflation or the two index builds
+      // (the section's most expensive untimed setup)
       val needDocs = cellNames.exists(c => c != "fvec_dot" &&
         c != "ivf_probe" && c != "mg_summary")
       val needEmb = cellNames.contains("fvec_dot") ||
@@ -1308,9 +1106,7 @@ object Bench {
     * regression, but the frame was uncontrolled (loadavg past
     * [[LoadavgGate]] at launch or arbitration, or calibs past the
     * floor-frame guard) — the flag is NON-AUTHORITATIVE, carried
-    * rather than failed, and excluded from `unresolved_flags`. The
-    * same stance the skew/datapath sections have always taken on a
-    * loaded host, extended to catalog floor flags. */
+    * rather than failed, and excluded from `unresolved_flags`. */
   final case class Rerun(name: String, first: Double, rerun: Double,
                          prev: Double, resolved: Boolean,
                          floorProv: Option[String] = None,
@@ -1337,9 +1133,9 @@ object Bench {
                         errored: Boolean): Boolean =
     !resolved && frameUncontrolled && !errored
 
-  /** The skew matrix may only be re-measured when the host's calib
-    * probes are within this factor of the floor-file frame — past it
-    * the host is loaded and a refresh would record noise. */
+  /** A calib probe more than this factor above its floor-file frame
+    * value marks the host loaded ([[hostLoaded]]): the record's frame
+    * says `controlled` 0 and a failed rerun is tagged frame_noise. */
   val SkewCalibGuard = 1.5
 
   /** A launch load average above this is an uncontrolled frame
@@ -1370,131 +1166,6 @@ object Bench {
       (fc > 0 && calib > 0 && calib > fc * SkewCalibGuard) ||
         (fs > 0 && calibSh > 0 && calibSh > fs * SkewCalibGuard)
     }
-
-  /** The skew-section decision kernel: (reMeasure?, contextTag).
-    * Controlled host → measure, tag "controlled". Loaded host with a
-    * previous matrix that is itself controlled evidence (context
-    * literally "controlled", or an earlier "carried" of one) → do NOT
-    * measure; carry the previous cells forward tagged "carried", so a
-    * loaded refresh can never replace controlled numbers. Everything
-    * else on a loaded host — no previous cells, a record already
-    * tagged "loaded", or a PRE-GUARD record with no context tag at
-    * all — → measure but tag "loaded": recorded, never quotable as
-    * controlled. The untagged case is the r13 verdict-#1 fix: the one
-    * contextless incumbent in history is the r12 loaded-closing-host
-    * matrix (scd2_plain_uniform 13.6 s vs plain_skew 6.5 s —
-    * physically backwards), and the previous "default to controlled"
-    * reading laundered it into quotable evidence for two rounds. An
-    * untagged matrix has unknown provenance and is carried NOWHERE;
-    * it gets replaced the first time any host qualifies to measure. */
-  def skewPlan(loadedHost: Boolean, prevCells: Map[String, Double],
-               prevCtx: Option[String]): (Boolean, String) =
-    if (!loadedHost) (true, "controlled")
-    else if (prevCells.nonEmpty &&
-        prevCtx.exists(c => c == "controlled" || c == "carried"))
-      (false, "carried")
-    else (true, "loaded")
-
-  /** Context tag for cells carried forward WITHOUT re-measuring (the
-    * disabled-by-env and measure-crashed paths): provenance must
-    * survive the carry. Only a matrix that is itself controlled
-    * evidence ("controlled", or an earlier "carried" of one) may be
-    * re-tagged "carried" — [[skewPlan]] treats "carried" as
-    * controlled-equivalent, so re-tagging a "loaded" (or untagged,
-    * unknown-provenance) matrix would launder untrusted measurements
-    * into evidence a later loaded host refuses to replace. Anything
-    * else keeps its own tag (or none). */
-  def carryCtx(prevCells: Map[String, Double],
-               prevCtx: Option[String]): String =
-    if (prevCells.isEmpty) ""
-    else if (prevCtx.exists(c => c == "controlled" || c == "carried"))
-      "carried"
-    else prevCtx.getOrElse("")
-
-  /** A re-measured controlled cell may only replace its carried
-    * controlled value silently when the two agree within this factor
-    * (either direction); past it the cell is re-repped, and a
-    * persisting disagreement is tagged in the record. */
-  val SkewDeviationFactor = 2.0
-
-  /** Cells whose fresh value deviates more than `factor`× — in either
-    * direction — from the carried controlled value (r14 verdict #1:
-    * the calib guard gates the RUN, but a single noisy cell inside an
-    * otherwise-controlled run could still silently replace a clean
-    * reading — scd2_salted_uniform landed at 15.86 s over a 3.79 s
-    * controlled cell with nothing in the record saying so). Cells
-    * missing on either side, or nonpositive, cannot deviate. */
-  def skewDeviations(fresh: Map[String, Double],
-                     carried: Map[String, Double],
-                     factor: Double = SkewDeviationFactor): Set[String] =
-    fresh.keySet.intersect(carried.keySet).filter { k =>
-      val (f, c) = (fresh(k), carried(k))
-      f > 0 && c > 0 && (f > c * factor || f * factor < c)
-    }
-
-  /** Replace the `"skew_bench":{...}` cells and the
-    * `"skew_bench_context"` tag inside an existing detail line,
-    * leaving every other byte untouched — the skew-only seeding path
-    * (a fresh controlled matrix must not discard the catalog record
-    * it rides in). A record with cells but NO context tag — the
-    * pre-guard unknown-provenance class this path exists to
-    * displace — gets the tag inserted right after the replaced
-    * cells. None only when the line has no skew section at all
-    * (nothing is guessed about where one would belong). */
-  def spliceSkewBench(detailTxt: String, cells: Map[String, Double],
-                      ctx: String,
-                      devs: Option[Set[String]] = None): Option[String] = {
-    val start = detailTxt.indexOf("\"skew_bench\":{")
-    val end = if (start < 0) -1 else detailTxt.indexOf('}', start)
-    if (start < 0 || end < 0 || cells.isEmpty) None
-    else {
-      // the first-'}' scan is correct ONLY while the section is a
-      // flat name→number map; a nested value would make `end` the
-      // WRONG brace and silently truncate the record on splice —
-      // fail loudly instead (r14 advice #3)
-      val section = detailTxt.substring(
-        start + "\"skew_bench\":{".length, end)
-      require(!section.contains('{'),
-        "skew_bench section is no longer a flat map -- " +
-          "spliceSkewBench's brace scan cannot splice it safely")
-      val body = cells.toSeq.sorted.map { case (k, v) =>
-        jsonStr(k) + ":" + fmt(v, 3) }.mkString(",")
-      val ctxJson = "\"skew_bench_context\":" + jsonStr(ctx)
-      val ctxRe = "\"skew_bench_context\":\"[^\"]*\"".r
-      val devsRe = ",\"skew_bench_deviations\":\\[[^\\]]*\\]".r
-      val devsJson = devs.map(_.toSeq.sorted.map(jsonStr)
-        .mkString(",\"skew_bench_deviations\":[", ",", "]"))
-      // the deviations tag rides with the context tag: dropped (a
-      // splice replaces the whole matrix, so stale names must not
-      // survive it) then re-inserted when this splice's guard ran
-      val base0 = devsRe.replaceFirstIn(detailTxt, "")
-      val start0 = base0.indexOf("\"skew_bench\":{")
-      val end0 = base0.indexOf('}', start0)
-      if (ctxRe.findFirstIn(base0).nonEmpty) {
-        val withCells = base0.substring(0, start0) +
-          "\"skew_bench\":{" + body + base0.substring(end0)
-        Some(ctxRe.replaceFirstIn(withCells,
-          java.util.regex.Matcher.quoteReplacement(
-            ctxJson + devsJson.getOrElse(""))))
-      } else
-        // pre-guard record: tag inserted adjacent to the cells, the
-        // position detailJson itself serializes it at
-        Some(base0.substring(0, start0) +
-          "\"skew_bench\":{" + body + "}," + ctxJson +
-          devsJson.getOrElse("") + base0.substring(end0 + 1))
-    }
-  }
-
-  /** The flat `"name":number` map inside `"skew_bench":{...}` of a
-    * detail line, tolerant like [[parseDetailQueries]]. */
-  def parseSkewBench(json: String): Map[String, Double] =
-    parseFlatSection(json, "skew_bench")
-
-  /** The flat `"name":number` cell map inside `"datapath_bench":{...}`
-    * of a detail line — the data-path kernel meter (r17 verdict #2),
-    * tolerant like [[parseDetailQueries]]. */
-  def parseDatapathBench(json: String): Map[String, Double] =
-    parseFlatSection(json, "datapath_bench")
 
   /** The numeric `"frame":{...}` block of a detail line — launch
     * loadavg, calib pair, controlled verdict (r17 verdict #5).
@@ -1719,11 +1390,10 @@ object Bench {
     parseFlatSection(json, "queries")
 
   /** The flat `"name":number` map inside `"<key>":{...}` — the ONE
-    * scan [[parseDetailQueries]] and [[parseSkewBench]] share (they
-    * were line-for-line copies; the first-'}' truncation-tolerance
-    * contract and the nested-brace hazard `spliceSkewBench` guards
-    * against now live in a single place). Tolerant of a truncated
-    * tail: a missing section returns empty, never throws. */
+    * scan [[parseDetailQueries]] and [[parseFrame]] share. It stops at
+    * the first '}', so the section must stay a flat map. Tolerant of
+    * a truncated tail: a missing section returns empty, never
+    * throws. */
   private def parseFlatSection(json: String,
                                key: String): Map[String, Double] = {
     val header = "\"" + key + "\":{"
@@ -1803,13 +1473,9 @@ object Bench {
                  skew: Map[String, Double] = Map.empty,
                  calibSh: Double = -1.0,
                  calibSh2: Double = -1.0,
-                 skewCtx: String = "",
                  coldMap: Map[String, Double] = Map.empty,
                  warmMap: Map[String, Double] = Map.empty,
-                 skewDevs: Option[Set[String]] = None,
                  datapath: Map[String, Double] = Map.empty,
-                 datapathCtx: String = "",
-                 datapathDevs: Option[Set[String]] = None,
                  loadavg: Double = -1.0,
                  controlled: Int = -1): String = {
     val total = results.collect { case (_, v, None) => v }.sum
@@ -1849,39 +1515,17 @@ object Bench {
         val fn = reruns.count(_.frameNoise)
         if (fn > 0) s""","frame_noise_flags":$fn""" else ""
       }
-    // skew evidence AFTER queries (parseDetailQueries scans to the
-    // first '}' past "queries":{ — nested objects must not precede it)
-    val skewPart =
-      (if (skew.isEmpty) ""
-       else skew.toSeq.sorted.map { case (k, v) =>
-         jsonStr(k) + ":" + fmt(v, 3)
-       }.mkString(""","skew_bench":{""", ",", "}")) +
-        (if (skew.nonEmpty && skewCtx.nonEmpty)
-          s""","skew_bench_context":${jsonStr(skewCtx)}"""
-         else "") +
-        // present (possibly []) ONLY when the deviation guard ran —
-        // "guard compared, these cells still disagree with the carried
-        // controlled matrix after a focused re-rep"; absent on carry/
-        // loaded paths where no comparison was possible
-        (if (skew.nonEmpty && skewDevs.isDefined)
-          skewDevs.get.toSeq.sorted.map(jsonStr)
-            .mkString(""","skew_bench_deviations":[""", ",", "]")
-         else "")
-    // data-path kernel cells (r17 verdict #2) — same shape and guard
-    // tags as the skew section, AFTER queries for the same parse
-    // reason (nested objects must not precede the queries scan)
-    val datapathPart =
-      (if (datapath.isEmpty) ""
-       else datapath.toSeq.sorted.map { case (k, v) =>
-         jsonStr(k) + ":" + fmt(v, 3)
-       }.mkString(""","datapath_bench":{""", ",", "}")) +
-        (if (datapath.nonEmpty && datapathCtx.nonEmpty)
-          s""","datapath_bench_context":${jsonStr(datapathCtx)}"""
-         else "") +
-        (if (datapath.nonEmpty && datapathDevs.isDefined)
-          datapathDevs.get.toSeq.sorted.map(jsonStr)
-            .mkString(""","datapath_bench_deviations":[""", ",", "]")
-         else "")
+    // flat name -> seconds maps, AFTER queries (parseDetailQueries
+    // scans to the first '}' past "queries":{ — nested objects must
+    // not precede it); an empty map omits its section
+    def auxMap(tag: String, m: Map[String, Double], prec: Int = 6): String =
+      if (m.isEmpty) ""
+      else m.toSeq.sortBy(_._1).map { case (k, v) =>
+        jsonStr(k) + ":" + fmt(v, prec)
+      }.mkString(s""","$tag":{""", ",", "}")
+    // skew evidence and data-path kernel cells (r17 verdict #2)
+    val cellsPart =
+      auxMap("skew_bench", skew, 3) + auxMap("datapath_bench", datapath, 3)
     // self-adjudicating frame block (r17 verdict #5): launch loadavg,
     // the calib pair, and the controlled verdict in ONE place —
     // numeric-only so parseFlatSection round-trips it. controlled:
@@ -1912,15 +1556,9 @@ object Bench {
     // cold (rep-1: build + first-compile + eager work + execute) and
     // warm (the post-reps probe: plan, generated code and shuffle
     // outputs reused — diagnostic only, never in the median) per
-    // query, AFTER queries for the same parse reason; absent entries
-    // mean the query errored or the probe failed
-    def auxMap(tag: String, m: Map[String, Double]): String =
-      if (m.isEmpty) ""
-      else m.toSeq.sortBy(_._1).map { case (k, v) =>
-        jsonStr(k) + ":" + fmt(v, 6)
-      }.mkString(s""","$tag":{""", ",", "}")
+    // query; absent entries mean the query errored or the probe failed
     val repsPart = auxMap("cold", coldMap) + auxMap("warm", warmMap)
-    s"""{"metric":"total","value":${fmt(total, 6)}$resolvedPart,"unit":"sec","reps":$reps$calibPart$cpusPart,"meas":"$Meas","queries":$qs$rerunPart$flagsPart$skewPart$datapathPart$framePart$repsPart${errPart(results)},"sf":"$sfName"}"""
+    s"""{"metric":"total","value":${fmt(total, 6)}$resolvedPart,"unit":"sec","reps":$reps$calibPart$cpusPart,"meas":"$Meas","queries":$qs$rerunPart$flagsPart$cellsPart$framePart$repsPart${errPart(results)},"sf":"$sfName"}"""
   }
 
   /** `,"value_resolved":N` when any flag was rerun-arbitrated to load

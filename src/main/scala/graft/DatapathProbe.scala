@@ -5,12 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Focused data-path cell probe — runs ONLY the named
   * [[Bench.datapathBench]] cells (all of them with no args) and
   * prints one JSON line, without paying for the 202-face catalog.
-  * The re-baselining tool for an intentional kernel rewrite (r18
-  * verdict #5's span_scrub): measure the cell before and after on an
-  * idle host, record the provenance in BENCH_NOTES, and let the next
-  * full bench run seed the new carried value. NEVER splices into
-  * BENCH_DETAIL.json — the full run's guard stack (calib gates,
-  * deviation re-reps, carry provenance) is the only writer of record.
+  * The tool for an intentional kernel rewrite (r18 verdict #5's
+  * span_scrub): measure the cell before and after on an idle host
+  * and note both readings in BENCH_NOTES. NEVER writes
+  * BENCH_DETAIL.json — the full bench run, which measures every cell
+  * and records its `frame` beside them, is the only writer of record.
   *
   * Usage: `scripts/run.sh graft.DatapathProbe <sfDir> [cell ...]`
   */
@@ -42,7 +41,7 @@ object DatapathProbe {
     // same session warm-up as Bench so cell timings share its frame
     spark.range(1000).selectExpr("sum(id)").collect()
     val cells = Bench.datapathBench(spark, args(0),
-      reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "3").toInt,
+      reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt,
       only = args.drop(1).toSet)
     // Locale.ROOT (the Bench.fmt convention): a comma-decimal default
     // locale would print 0,292 and break the JSON line; and the

@@ -106,26 +106,6 @@ object Sinks {
       .csv(path)
   }
 
-  /** Partitioned parquet sink with DYNAMIC partition overwrite — the
-    * lake-table maintenance write the daily jobs need at scale: a
-    * re-run (or a backfill of one day) replaces ONLY the partitions
-    * present in the incoming batch and leaves every other partition's
-    * files untouched, instead of `overwrite`'s default
-    * truncate-the-whole-table. Same T6 idempotence contract as the
-    * gzip sink — re-delivering a batch lands byte-identical
-    * partitions — but at partition granularity, so a 100 TB table
-    * never rewrites except where data changed.
-    *
-    * The mode is set on the WRITER (not the session) so the contract
-    * travels with this sink and can't leak into unrelated writes. */
-  def partitionedParquet(df: DataFrame, path: String,
-                         partitionCols: Seq[String]): Unit =
-    // ONE mechanism: the dynamic-overwrite contract lives in
-    // operators.Partitioning.writePartitioned; this is the job-layer
-    // name for it (a second verbatim writer here drifted from the
-    // operator copy once already)
-    graft.operators.Partitioning.writePartitioned(df, path, partitionCols)
-
   import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
 
   /** Converge a prior crashed extract swap: restore the moved-aside
@@ -213,9 +193,9 @@ object Sinks {
       // violation the staged swap exists to prevent.
       val t = targets.head
       val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val tmp = new HPath(s"$t/${key}__incoming")
       Seq(t -> (try {
         val dst = new HPath(s"$t/$key")
-        val tmp = new HPath(s"$t/${key}__incoming")
         val old = new HPath(s"$t/${key}__old")
         val fs = dst.getFileSystem(conf)
         convergeExtractSwap(fs, dst, old)
@@ -225,7 +205,13 @@ object Sinks {
         if (!hasParts) throw new java.io.IOException(
           s"no part files committed in $tmp; prior extract intact")
         swapExtractIn(fs, dst, tmp, old)
-      } catch { case e: Exception => logFail(s"target $t", e) }))
+      } catch { case e: Exception =>
+        // mode("overwrite") creates __incoming before the job runs, so
+        // a job that fails at execution leaves it behind, empty
+        try tmp.getFileSystem(conf).delete(tmp, true)
+        catch { case _: Exception => () }
+        logFail(s"target $t", e)
+      }))
     } else {
       import org.apache.hadoop.fs.FileUtil
       val sc = df.sparkSession.sparkContext

@@ -33,8 +33,8 @@ object TextDedup {
       .select(col(idCol), explode(array_distinct(expr(BigramShingleSql)))
         .as("shingle"))
 
-  /** 128-bit gram identity: two independently-seeded xxhash64 halves
-    * as two FLAT LONG columns (g1, g2) — fixed-width 16-byte keys
+  /** 128-bit gram identity: two xxhash64 halves as two FLAT LONG
+    * columns (g1, g2) — fixed-width 16-byte keys
     * that join and group like any pair of columns. Flat longs, NOT a
     * struct: struct grouping/join keys fall off the codegen'd
     * primitive-key fast paths (measured r21: a struct-keyed
@@ -45,9 +45,12 @@ object TextDedup {
     * pairs is d²/2^65 for one 64-bit hash — ~270 expected collisions
     * at the 100 TB corpus scale of d ≈ 10¹¹ grams, each one silently
     * inflating an intersection count or merging two LSH buckets —
-    * versus d²/2^129 ≈ 1.5·10⁻¹⁷ for the seeded pair (both halves
-    * must collide simultaneously; the "g2|" salt makes the second
-    * half an independent draw). Non-certification faces
+    * versus d²/2^129 ≈ 1.5·10⁻¹⁷ for the pair (both halves must
+    * collide simultaneously). Both halves are Spark's SAME fixed-seed
+    * xxhash64; the second hashes the gram behind a "g2|" prefix, so
+    * the halves are prefix-salted, heuristically independent — not
+    * independently seeded — and the d²/2^129 figure holds only as far
+    * as that heuristic does. Non-certification faces
     * (novelty/chunk-dup reports) keep the single hash: a collision
     * there perturbs one count cell, not a certified pair set, and
     * the 8-byte key halves their hottest exchange. */
@@ -136,16 +139,19 @@ object TextDedup {
     require(nBands > 0 && numPerms % nBands == 0,
       s"numPerms=$numPerms must divide into nBands=$nBands")
     val rows = numPerms / nBands
-    // bucket identity is a 128-bit two-seed xxhash64 PAIR (bkt1,
-    // bkt2 — flat longs, the [[gramKey128]] stance) over the band's
-    // concatenated signature hex, NOT an md5 hex string (r20 moved to
+    // bucket identity is a 128-bit xxhash64 PAIR (bkt1, bkt2 — flat
+    // longs, the [[gramKey128]] stance; bkt2 is the same fixed-seed
+    // hash behind a "b2|" prefix, prefix-salted and heuristically
+    // independent) over the band's concatenated signature hex, NOT
+    // an md5 hex string (r20 moved to
     // one xxhash64 long; r21 verdict #3 widened it back to 128 bits
     // because LSH banding feeds CERTIFICATION faces —
     // dd_minhash_lsh's output IS the pair set and dd_lsh_recall*
     // certify banding recall, so a bucket-merging collision perturbs
     // exactly the claim being certified; see [[gramKey128]] for the
     // birthday math: ~d²/2^65 expected collisions at 10¹¹ keys for
-    // one hash vs ~10⁻¹⁷ for the pair). No consumer ever reads a
+    // one hash vs ~10⁻¹⁷ for the pair, if the halves behave as
+    // independent). No consumer ever reads a
     // bucket value — every face groups or self-joins on equality — so
     // the fixed 16 bytes still beat the 32-byte md5 hex string
     // through the candidate join and skip the digest+hex allocation
@@ -214,10 +220,10 @@ object TextDedup {
     * the second, exactly as the eager form's one materializing job
     * did — and when the caller re-persists the pairs itself (the
     * recall-certification faces), where checkpoint-then-cache stored
-    * the same small table twice. Callers that COLLECT the pairs
-    * mid-call (the connected-components faces) keep [[lshCandidates]]:
-    * minLabel's own edge materialization wants a truncated plan under
-    * it, not this whole subtree. (r20; measured on
+    * the same small table twice. The connected-components faces take
+    * this form too, through `Dedup.lshLabels`: minLabel's own edge
+    * materialization pays the one checkpoint the eager form would
+    * have duplicated. (r20; measured on
     * dd_minhash_lsh/dd_fuzzy_verify/dd_method_agreement/
     * dd_lsh_recall*.) */
   def lshCandidatesLazy(docs: DataFrame, numPerms: Int, nBands: Int,
@@ -249,12 +255,13 @@ object TextDedup {
     * branches here. Cost ∝ candidates × overlap, never pairs².
     *
     * Exactness bound: a collision inflating one pair's n_inter needs
-    * BOTH independently-seeded 64-bit halves of [[gramKey128]] to
-    * collide on two distinct grams of the same doc pair —
-    * ~d²/2^129 expected corpus-wide (≈10⁻¹⁷ at d = 10¹¹ grams), so
-    * the verify faces' exactness claim holds at any realistic scale;
-    * the catalog oracle replays the intersection on the strings, so
-    * a collision would surface as a hash mismatch. */
+    * BOTH 64-bit halves of [[gramKey128]] to collide on two distinct
+    * grams of the same doc pair. The halves are prefix-salted,
+    * heuristically independent (one fixed-seed xxhash64, the second
+    * over a "g2|"-prefixed gram), so ~d²/2^129 expected corpus-wide
+    * (≈10⁻¹⁷ at d = 10¹¹ grams) is the bound under that heuristic,
+    * not a proven one; the catalog oracle replays the intersection on
+    * the strings, so a collision would surface as a hash mismatch. */
   def pairOverlap(shh: DataFrame, cand: DataFrame): DataFrame = {
     val sizes = shh.groupBy("doc_id").agg(count(lit(1)).as("__n"))
     val inter = cand

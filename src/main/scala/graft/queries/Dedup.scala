@@ -213,14 +213,14 @@ object Dedup extends QueryModule {
       // duplicates = min over distinct) without the md5-per-shingle-row
       // groupBy shuffle; the persisted shingle table serves only the
       // sizes and the intersection join (both inside pairOverlap).
-      // Lazily persisted, like sh: the one job that materializes the
-      // final result populates both caches in passing — an eager
-      // checkpoint here costs a whole extra pass over the corpus
-      // (r6's bench regression).
-      val bd = TextDedup.bands(TextDedup.signaturesNarrow(
-        Tables(s, dir, "documents"), 8), 8, 2).persist()
-      val cand = TextDedup.candidates(bd)
-        .select("doc_a", "doc_b").persist()
+      // The band table is lazily persisted, like sh: the one job that
+      // materializes the final result populates both caches in
+      // passing — an eager checkpoint here costs a whole extra pass
+      // over the corpus (r6's bench regression). cand feeds both
+      // branches of pairOverlap, so it is persisted too.
+      val (candLazy, bd) = TextDedup.lshCandidatesLazy(
+        Tables(s, dir, "documents"), numPerms = 8, nBands = 2)
+      val cand = candLazy.select("doc_a", "doc_b").persist()
       // jaccard is a single IEEE division of exact integers — Spark and
       // DuckDB produce bit-identical doubles, so no decimal cast and the
       // >= 0.5 filter applies to the same raw value on both sides
@@ -1290,12 +1290,11 @@ object Dedup extends QueryModule {
       // hashed 16-byte gram keys persisted once (r21; see pairOverlap)
       val sh = TextDedup.hashedShingles(Tables(s, dir, "documents"))
         .persist()
-      val sigs = TextDedup.signaturesNarrow(
-        Tables(s, dir, "documents"), 8).persist()
       // cand feeds BOTH branches of the overlap kernel — persisted so
       // the banded self-join runs once, not once per branch
-      val cand = TextDedup.candidates(TextDedup.bands(sigs, 8, 2))
-        .select("doc_a", "doc_b").persist()
+      val (candLazy, bd) = TextDedup.lshCandidatesLazy(
+        Tables(s, dir, "documents"), numPerms = 8, nBands = 2)
+      val cand = candLazy.select("doc_a", "doc_b").persist()
       val result = TextDedup.pairOverlap(sh, cand)
         .select(col("doc_a"), col("doc_b"),
           (col("n_inter").cast("double") / least(col("n_a"), col("n_b")))
@@ -1305,7 +1304,7 @@ object Dedup extends QueryModule {
         .withColumn("is_partial_dup",
           col("containment") >= 0.7 && col("jaccard") < 0.7)
         .orderBy("doc_a", "doc_b")
-      CacheScope.eval(result)(sh, sigs, cand)
+      CacheScope.eval(result)(sh, bd, cand)
     },
     Some(s"""
       WITH $shinglesSql, $sigSql, $candSql,

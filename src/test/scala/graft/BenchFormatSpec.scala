@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 
 /** The bench stdout line is a DRIVER CONTRACT: only the last ~2000
   * chars of stdout survive capture, with the sbt epilogue inside the
@@ -184,76 +185,46 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.parseDetailQueries(detail).size === 120)
   }
 
-  test("skew context + cold/warm maps serialize, round-trip, stay parseable") {
-    val skew = Map("cusum_plain_skew" -> 10.5, "cusum_salted_skew" -> 3.7)
+  test("cold/warm maps serialize after queries and stay parseable") {
     val cold = Map("dd_some_catalog_query_name_001" -> 1.9)
     val warm = Map("dd_some_catalog_query_name_001" -> 0.8)
     val detail = Bench.detailJson(mk(120), 3, "sf0.1", calib = 0.2,
-      cpus = "32", skew = skew, skewCtx = "carried",
-      coldMap = cold, warmMap = warm)
+      cpus = "32", coldMap = cold, warmMap = warm)
     val js = mapper.readTree(detail)
-    assert(js.get("skew_bench_context").asText() === "carried")
     assert(js.get("cold").get("dd_some_catalog_query_name_001")
       .asDouble() === 1.9)
     assert(js.get("warm").get("dd_some_catalog_query_name_001")
       .asDouble() === 0.8)
-    // the queries parser still stops at the queries object, and the
-    // skew parser round-trips its own section
+    // the queries parser still stops at the queries object
     assert(Bench.parseDetailQueries(detail).size === 120)
-    assert(Bench.parseSkewBench(detail) === skew)
-    assert(Bench.parseDetailField(detail, "skew_bench_context")
-      === Some("carried"))
-    // no context tag without cells; no tag requested → absent
-    val bare = Bench.detailJson(mk(5), 3, "sf0.1", skew = skew)
-    assert(!mapper.readTree(bare).has("skew_bench_context"))
-    assert(Bench.parseSkewBench("{\"queries\":{\"a\":1}}") === Map.empty)
   }
 
-  test("datapath_bench cells + context + deviations serialize after " +
-      "queries, round-trip, and leave every other parser untouched") {
+  test("skew and datapath cells serialize untagged; parsers stop at their sections") {
+    // a full run records the cells it measured, beside the frame
+    // block a reader judges them by: no provenance or deviation tags
+    val skew = Map("join_plain_skew" -> 1.605, "cusum_salted_skew" -> 3.7)
     val dp = Map("gopher_stats" -> 1.234, "bm25_probe" -> 0.456,
       "png_decode" -> 2.001)
     val detail = Bench.detailJson(mk(120), 3, "sf0.1", calib = 0.2,
-      cpus = "32", skew = Map("join_plain_skew" -> 1.5),
-      skewCtx = "controlled", datapath = dp,
-      datapathCtx = "controlled", datapathDevs = Some(Set("png_decode")))
+      cpus = "32", skew = skew, calibSh = 0.8,
+      coldMap = Map("dd_some_catalog_query_name_001" -> 1.9),
+      datapath = dp, loadavg = 0.375, controlled = 1)
     val js = mapper.readTree(detail)
-    assert(js.get("datapath_bench").get("gopher_stats")
-      .asDouble() === 1.234)
-    assert(js.get("datapath_bench_context").asText() === "controlled")
-    assert(js.get("datapath_bench_deviations").get(0)
-      .asText() === "png_decode")
-    // round-trips through its own parser; the queries/skew parsers
-    // still stop at their own sections
-    assert(Bench.parseDatapathBench(detail) === dp)
+    assert(js.get("skew_bench").get("join_plain_skew").asDouble() === 1.605)
+    assert(js.get("skew_bench").size() === 2)
+    assert(js.get("datapath_bench").get("gopher_stats").asDouble() === 1.234)
+    assert(js.get("datapath_bench").size() === 3)
+    val keys = js.fieldNames().asScala.toSeq
+    assert(!keys.exists(k => k.endsWith("_context") ||
+      k.endsWith("_deviations")), s"tagged record: $keys")
+    // neither parser reads into the cell maps that follow its section
     assert(Bench.parseDetailQueries(detail).size === 120)
-    assert(Bench.parseSkewBench(detail) ===
-      Map("join_plain_skew" -> 1.5))
-    assert(Bench.parseDetailField(detail, "datapath_bench_context")
-      === Some("controlled"))
-    // no cells → no section, no tags; missing section parses empty
-    val bare = Bench.detailJson(mk(5), 3, "sf0.1",
-      datapathCtx = "controlled")
+    assert(Bench.parseFrame(detail) === Map("loadavg" -> 0.375,
+      "calib" -> 0.2, "calib_sh" -> 0.8, "controlled" -> 1.0))
+    // no cells (subset run, or a section that threw) → no section
+    val bare = Bench.detailJson(mk(5), 3, "sf0.1")
+    assert(!mapper.readTree(bare).has("skew_bench"))
     assert(!mapper.readTree(bare).has("datapath_bench"))
-    assert(!mapper.readTree(bare).has("datapath_bench_context"))
-    assert(Bench.parseDatapathBench("{\"queries\":{\"a\":1}}")
-      === Map.empty)
-    // the carry/guard decision kernel is shared with the skew matrix:
-    // a loaded host carries controlled datapath cells verbatim
-    assert(Bench.skewPlan(loadedHost = true, dp,
-      Some("controlled")) === ((false, "carried")))
-    // and the deviation guard flags a >2x cell in either direction
-    assert(Bench.skewDeviations(
-      Map("gopher_stats" -> 2.9), dp) === Set("gopher_stats"))
-    // carry-without-measuring preserves provenance: only controlled
-    // evidence may be re-tagged "carried" — a 'loaded' or untagged
-    // matrix keeps its own tag, so skewPlan can replace it later
-    // instead of treating laundered noise as controlled-equivalent
-    assert(Bench.carryCtx(dp, Some("controlled")) === "carried")
-    assert(Bench.carryCtx(dp, Some("carried")) === "carried")
-    assert(Bench.carryCtx(dp, Some("loaded")) === "loaded")
-    assert(Bench.carryCtx(dp, None) === "")
-    assert(Bench.carryCtx(Map.empty, Some("controlled")) === "")
   }
 
   test("frame_noise flags: tagged in the record, carried not failed " +
@@ -337,12 +308,10 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.parseFrame(pre) === Map.empty)
   }
 
-  test("skew guard: loaded host can never overwrite a controlled matrix") {
+  test("hostLoaded: a calib probe past the guard or launch loadavg past the gate") {
     val frame = Some((0.7, 0.9))
     // within guard on both probes → controlled re-measure
     assert(!Bench.hostLoaded(frame, 0.9, 1.2))
-    assert(Bench.skewPlan(loadedHost = false, Map("c" -> 1.0),
-      Some("controlled")) === ((true, "controlled")))
     // either probe past 1.5× its frame → loaded
     assert(Bench.hostLoaded(frame, 1.1, 0.9))   // cpu 1.57×
     assert(Bench.hostLoaded(frame, 0.7, 1.4))   // shuffle 1.56×
@@ -363,123 +332,6 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(!Bench.hostLoaded(None, 99.0, 99.0, loadavg = -1.0))
     assert(!Bench.hostLoaded(None, 99.0, 99.0,
       loadavg = Bench.LoadavgGate))
-    // loaded + previous controlled cells → CARRY, do not re-measure
-    // (the r12 failure: a 2.4×-loaded closing refresh overwrote the
-    // builder's controlled matrix with physically-backwards cells)
-    assert(Bench.skewPlan(loadedHost = true,
-      Map("scd2_plain_uniform" -> 2.4), Some("controlled"))
-      === ((false, "carried")))
-    // an already-carried matrix keeps being carried under load
-    assert(Bench.skewPlan(loadedHost = true, Map("c" -> 1.0),
-      Some("carried")) === ((false, "carried")))
-    // a record with NO context tag has unknown provenance (r13
-    // verdict #1: the one such incumbent was the r12 loaded-host
-    // matrix with physically-backwards cells, and defaulting it to
-    // "controlled" laundered it into quotable evidence) — it is
-    // carried NOWHERE: the loaded host re-measures and says "loaded"
-    assert(Bench.skewPlan(loadedHost = true, Map("c" -> 1.0), None)
-      === ((true, "loaded")))
-    // nothing worth protecting: measure, but the record says "loaded"
-    assert(Bench.skewPlan(loadedHost = true, Map.empty,
-      Some("controlled")) === ((true, "loaded")))
-    assert(Bench.skewPlan(loadedHost = true, Map("c" -> 1.0),
-      Some("loaded")) === ((true, "loaded")))
-  }
-
-  test("skew-only splice replaces cells + context, touches nothing else") {
-    val orig = Bench.detailJson(mk(20), 3, "sf0.1", calib = 0.3,
-      cpus = "32", skew = Map("scd2_plain_uniform" -> 13.641,
-        "scd2_plain_skew" -> 6.458), skewCtx = "carried")
-    val fresh = Map("scd2_plain_uniform" -> 5.8, "scd2_plain_skew" -> 11.2)
-    val patched = Bench.spliceSkewBench(orig, fresh, "controlled").get
-    val js = mapper.readTree(patched)
-    assert(js.get("skew_bench").get("scd2_plain_uniform").asDouble() === 5.8)
-    assert(js.get("skew_bench").size() === 2)
-    assert(js.get("skew_bench_context").asText() === "controlled")
-    // the catalog record around the splice is byte-identical
-    assert(js.get("queries").size() === 20)
-    assert(js.get("calib").asDouble() === 0.3)
-    assert(Bench.parseSkewBench(patched) === fresh)
-    // a PRE-GUARD record (cells, no context tag — the unknown-
-    // provenance class the seeding path exists to displace) gets the
-    // tag inserted next to the replaced cells, staying valid JSON
-    val preGuard = Bench.detailJson(mk(20), 3, "sf0.1", calib = 0.3,
-      skew = Map("scd2_plain_uniform" -> 13.641))
-    assert(!mapper.readTree(preGuard).has("skew_bench_context"))
-    val seeded = Bench.spliceSkewBench(preGuard, fresh, "controlled").get
-    val sjs = mapper.readTree(seeded)
-    assert(sjs.get("skew_bench_context").asText() === "controlled")
-    assert(sjs.get("skew_bench").get("scd2_plain_skew").asDouble() === 11.2)
-    assert(sjs.get("skew_bench").size() === 2)
-    assert(sjs.get("queries").size() === 20)
-    assert(Bench.parseDetailField(seeded, "skew_bench_context")
-      === Some("controlled"))
-    // no skew section at all / no cells → refuse rather than guess
-    val bare = Bench.detailJson(mk(5), 3, "sf0.1")
-    assert(Bench.spliceSkewBench(bare, fresh, "controlled") === None)
-    assert(Bench.spliceSkewBench(orig, Map.empty, "controlled") === None)
-  }
-
-  test("skew deviation guard: >2x cells detected, tagged, spliced; " +
-      "brace drift fails loudly") {
-    // the kernel: either direction past the factor, missing or
-    // nonpositive cells can never deviate (r14 verdict #1: a 15.86 s
-    // cell over a 3.79 s carried controlled value shipped untagged)
-    val carried = Map("scd2_salted_uniform" -> 3.79,
-      "join_plain_skew" -> 1.6, "cusum_plain_skew" -> 10.0,
-      "gone" -> 2.0, "bad" -> -1.0)
-    val fresh = Map("scd2_salted_uniform" -> 15.86, // 4.2× slower
-      "join_plain_skew" -> 0.7,                     // 2.3× faster
-      "cusum_plain_skew" -> 11.0,                   // within 2×
-      "new_cell" -> 9.9, "bad" -> 5.0)
-    assert(Bench.skewDeviations(fresh, carried)
-      === Set("scd2_salted_uniform", "join_plain_skew"))
-    assert(Bench.skewDeviations(fresh, carried, factor = 5.0)
-      === Set.empty)
-    // exactly at the factor is NOT a deviation (strict >)
-    assert(Bench.skewDeviations(Map("a" -> 2.0), Map("a" -> 1.0))
-      === Set.empty)
-    // detailJson: the tag is present (sorted, possibly empty) exactly
-    // when the guard compared — Some — and absent when it could not
-    val skew = Map("scd2_salted_uniform" -> 15.86)
-    val tagged = Bench.detailJson(mk(10), 3, "sf0.1", cpus = "32",
-      skew = skew, skewCtx = "controlled",
-      skewDevs = Some(Set("scd2_salted_uniform")))
-    val tjs = mapper.readTree(tagged)
-    assert(tjs.get("skew_bench_deviations").size() === 1)
-    assert(tjs.get("skew_bench_deviations").get(0).asText()
-      === "scd2_salted_uniform")
-    val clean = Bench.detailJson(mk(10), 3, "sf0.1", cpus = "32",
-      skew = skew, skewCtx = "controlled", skewDevs = Some(Set.empty))
-    assert(mapper.readTree(clean).get("skew_bench_deviations").size()
-      === 0)
-    val noGuard = Bench.detailJson(mk(10), 3, "sf0.1", cpus = "32",
-      skew = skew, skewCtx = "carried")
-    assert(!mapper.readTree(noGuard).has("skew_bench_deviations"))
-    // splice: a stale deviations tag is dropped with the matrix it
-    // described; the new guard's tag rides in with the context
-    val fresh2 = Map("scd2_salted_uniform" -> 3.9)
-    val respliced = Bench.spliceSkewBench(tagged, fresh2, "controlled",
-      devs = Some(Set.empty)).get
-    val rjs = mapper.readTree(respliced)
-    assert(rjs.get("skew_bench").get("scd2_salted_uniform")
-      .asDouble() === 3.9)
-    assert(rjs.get("skew_bench_deviations").size() === 0)
-    assert(rjs.get("queries").size() === 10)
-    val guardless = Bench.spliceSkewBench(tagged, fresh2,
-      "controlled").get
-    assert(!mapper.readTree(guardless).has("skew_bench_deviations"))
-    val reTagged = Bench.spliceSkewBench(noGuard, fresh2, "controlled",
-      devs = Some(Set("scd2_salted_uniform"))).get
-    assert(mapper.readTree(reTagged).get("skew_bench_deviations")
-      .get(0).asText() === "scd2_salted_uniform")
-    // a nested value inside skew_bench would put the first '}' at
-    // the wrong brace — the splice must refuse loudly, not truncate
-    val nested = tagged.replace(""""skew_bench":{""",
-      """"skew_bench":{"inner":{"x":1},""")
-    intercept[IllegalArgumentException] {
-      Bench.spliceSkewBench(nested, fresh2, "controlled")
-    }
   }
 
   test("value_resolved: resolved flags replace their medians in the companion total") {

@@ -76,10 +76,12 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     def readT1() = spark.read.csv(s"$dir/t1/$key").collect()
       .map(_.getString(0)).toSeq
     assert(readT1() == Seq("1"))
-    // a frame that fails at EXECUTION time: the staging write errors,
-    // every target reports false, and yesterday's extract still serves
+    // a frame that fails at EXECUTION time (the cast gives the column
+    // a writable type, so the write gets past analysis and the job
+    // itself throws): the staging write errors, every target reports
+    // false, and yesterday's extract still serves
     val bad = spark.range(1)
-      .selectExpr("raise_error('boom') AS id", "'x' AS v")
+      .selectExpr("CAST(raise_error('boom') AS STRING) AS id", "'x' AS v")
     val r2 = Sinks.fanOut(bad, Seq(s"$dir/t1", s"$dir/t2"), key)
     assert(r2.forall(!_._2), s"failed delivery reported success: $r2")
     assert(readT1() == Seq("1"),
@@ -99,13 +101,16 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     assert(readT1() == Seq("1"))
     // the old single-target path wrote mode("overwrite") straight to
     // the serving key — Spark deleted it before the job ran, so this
-    // failure destroyed the extract
+    // failure destroyed the extract. The cast makes it an EXECUTION
+    // failure: the write creates __incoming, then the job throws
     val bad = spark.range(1)
-      .selectExpr("raise_error('boom') AS id", "'x' AS v")
+      .selectExpr("CAST(raise_error('boom') AS STRING) AS id", "'x' AS v")
     val r = Sinks.fanOut(bad, Seq(s"$dir/t1"), key)
     assert(r.forall(!_._2), s"failed delivery reported success: $r")
     assert(readT1() == Seq("1"),
       "a failed single-target delivery destroyed the previous extract")
+    assert(!new java.io.File(s"$dir/t1/${key}__incoming").exists(),
+      "failed delivery left an __incoming remnant")
     // and a healthy redelivery swaps in
     assert(Sinks.fanOut(Seq((2L, "b")).toDF("id", "v"),
       Seq(s"$dir/t1"), key).forall(_._2))
@@ -608,22 +613,24 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   test("partitionedParquet dynamic overwrite replaces only incoming " +
     "partitions, idempotently") {
+    // the partitioned-parquet sink contract lives in writePartitioned
+    import graft.operators.Partitioning
     val dir = Files.createTempDirectory("dynpart").toString
     // non-date partition values: partition-column type inference would
     // otherwise read ISO strings back as DATEs
     def table(): Set[(Long, String)] =
       spark.read.parquet(dir).select("id", "day").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
-    Sinks.partitionedParquet(
+    Partitioning.writePartitioned(
       Seq((1L, "d1"), (2L, "d2")).toDF("id", "day"), dir, Seq("day"))
     assert(table() == Set((1L, "d1"), (2L, "d2")))
     // a backfill batch touching only d2 must leave d1's files alone —
     // default overwrite would truncate the whole table
     val backfill = Seq((20L, "d2")).toDF("id", "day")
-    Sinks.partitionedParquet(backfill, dir, Seq("day"))
+    Partitioning.writePartitioned(backfill, dir, Seq("day"))
     assert(table() == Set((1L, "d1"), (20L, "d2")))
     // T6: re-delivering the same batch lands the identical table
-    Sinks.partitionedParquet(backfill, dir, Seq("day"))
+    Partitioning.writePartitioned(backfill, dir, Seq("day"))
     assert(table() == Set((1L, "d1"), (20L, "d2")))
   }
 
